@@ -401,14 +401,16 @@ def minhash_slot_sql(seed: str, h: str) -> str:
     return f"((2*{seed}+1)*{h} + {seed}*{MINHASH_C}) % {MINHASH_P}"
 
 
-def minhash_signatures(documents: DataFrame, k: int = 3, num_hashes: int = 16) -> DataFrame:
-    """(doc_id, sig ARRAY<BIGINT>[num_hashes]) — signature slot i is
+def _sig_expr(k: int, num_hashes: int) -> Column:
+    """The ``sig`` column over a ``text`` column: signature slot i is
     min over shingles of ((2i+1)*md5_bigint(shingle) + i*C) mod P.
 
     The shingle-hash array is let-bound (functions.expr.let) so the
     normalize/shingle/md5 pass runs exactly once per doc; each signature
     slot is then an array_min over cheap affine arithmetic. No row
-    explosion by num_hashes, no repeated md5."""
+    explosion by num_hashes, no repeated md5. Built once and applied to
+    any number of frames: the streaming ingest builds it once per
+    stream, not once per micro-batch."""
 
     def _sig(hs: Column) -> Column:
         return F.transform(
@@ -426,11 +428,36 @@ def minhash_signatures(documents: DataFrame, k: int = 3, num_hashes: int = 16) -
 
     # NB: explicit unary lambda — md5_bigint(col, offset=0) is 2-ary, and
     # F.transform would otherwise feed the array index into `offset`.
-    # _ensure_parallel: the per-row shingle+md5+array_min work is the
-    # whole cost of this operator and must not serialize on a narrow
-    # upstream partitioning.
     hashed = F.transform(word_shingles(F.col("text"), k), lambda x: md5_bigint(x))
-    return _ensure_parallel(documents).select("doc_id", let(hashed, _sig).alias("sig"))
+    return let(hashed, _sig).alias("sig")
+
+
+def _bands_expr(num_hashes: int, bands: int) -> Column:
+    """Generator over a ``sig`` column: one (band, bkey) row per band,
+    bkey = md5 of that band's r = num_hashes/bands signature slots.
+    Built once per stream, like `_sig_expr`."""
+    r = num_hashes // bands
+    return F.inline(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda b: F.struct(
+                b.alias("band"),
+                F.md5(
+                    F.concat_ws(
+                        ",", F.slice(F.col("sig"), b * r + 1, r).cast("array<string>")
+                    )
+                ).alias("bkey"),
+            ),
+        )
+    )
+
+
+def minhash_signatures(documents: DataFrame, k: int = 3, num_hashes: int = 16) -> DataFrame:
+    """(doc_id, sig ARRAY<BIGINT>[num_hashes]) — see `_sig_expr`.
+    _ensure_parallel: the per-row shingle+md5+array_min work is the
+    whole cost of this operator and must not serialize on a narrow
+    upstream partitioning."""
+    return _ensure_parallel(documents).select("doc_id", _sig_expr(k, num_hashes))
 
 
 def minhash_lsh_pairs(
@@ -504,25 +531,8 @@ def minhash_band_table(
     the document's own text and the (k, num_hashes, bands) config, so
     rows written by one run join correctly against rows written by any
     later run."""
-    r = num_hashes // bands
     sigs = _cached_signatures(documents, k, num_hashes)
-    return sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",", F.slice(F.col("sig"), b * r + 1, r).cast("array<string>")
-                        )
-                    ).alias("bkey"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("doc_id", "sig", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
+    return sigs.select("doc_id", "sig", _bands_expr(num_hashes, bands))
 
 
 def minhash_candidate_pairs(
@@ -555,7 +565,6 @@ def minhash_index_update(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    new_bands: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental near-dedup of a NEW document batch against an
     already-indexed corpus — the operation a production pipeline runs
@@ -569,11 +578,11 @@ def minhash_index_update(
     updated_index)``:
 
     - ``pairs``: verified near-dup pairs (doc_a < doc_b, est_jaccard >=
-      threshold) where AT LEAST ONE side is in ``new_docs`` — both
-      new-vs-index (an equi-join of the new batch's band rows against
-      the stored band table; the index is NEVER re-shingled or
-      self-joined) and new-vs-new (the fresh batch may duplicate
-      itself);
+      threshold) where AT LEAST ONE side is in ``new_docs`` — one
+      equi-join of the new batch's band rows against
+      ``updated_index``, so it finds both new-vs-index and new-vs-new
+      pairs (the fresh batch may duplicate itself); the stored index
+      is NEVER re-shingled or self-joined;
     - ``updated_index``: ``index_df`` with any rows for RE-INGESTED
       doc_ids replaced by the new batch's band rows (anti-join on
       doc_id, then union) — the table the caller persists for the next
@@ -581,7 +590,7 @@ def minhash_index_update(
       models: a re-crawled document's new text must supersede its old
       band rows, or the index accumulates stale keys that corrupt every
       later candidate join (ADVICE r6). The anti-join's build side is
-      the new batch's distinct doc_ids — small, so AQE broadcasts it.
+      the new batch's doc_ids — small, so AQE broadcasts it.
 
     Update-then-query ≡ full rebuild: band keys are pure functions of
     each document's text, so the pairs returned here are EXACTLY the
@@ -593,58 +602,58 @@ def minhash_index_update(
     batch's band rows — AQE can broadcast a small batch against a huge
     index); verify is slot comparison on candidates. The stored index
     grows by num_bands rows/doc, the same asymptotics any LSH store
-    pays.
+    pays. The streaming ingest (`streaming.ingest.minhash_dedup_ingest`)
+    runs the same body minus the pair dedup."""
+    new_bands = minhash_band_table(new_docs, k, num_hashes, bands)
+    rows, updated = _minhash_index_candidates(
+        new_docs, index_df, new_bands, num_hashes, threshold
+    )
+    return rows.dropDuplicates(["doc_a", "doc_b"]), updated
 
-    ``new_bands``: optionally a PRECOMPUTED `minhash_band_table` of
-    ``new_docs`` (callers that also need the batch's band rows — the
-    streaming ingest's delta-append — pass a lazily checkpointed one so
-    signatures are computed once, not once per consumer)."""
-    if new_bands is None:
-        new_bands = minhash_band_table(new_docs, k, num_hashes, bands)
-    # drop the stored rows of any re-ingested doc_id BEFORE both the
-    # candidate join and the union: new text supersedes old
-    base_index = index_df.join(
-        new_docs.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
-    ni = (
-        new_bands.alias("a")
-        .join(base_index.alias("b"), ["band", "bkey"])
-        .where(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-            F.when(F.col("a.doc_id") < F.col("b.doc_id"), F.col("a.sig"))
-            .otherwise(F.col("b.sig"))
-            .alias("sig_a"),
-            F.when(F.col("a.doc_id") < F.col("b.doc_id"), F.col("b.sig"))
-            .otherwise(F.col("a.sig"))
-            .alias("sig_b"),
-        )
-    )
-    nn = (
-        new_bands.alias("a")
-        .join(new_bands.alias("b"), ["band", "bkey"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-    )
+
+def _minhash_index_candidates(
+    new_docs: DataFrame,
+    index_df: DataFrame,
+    new_bands: DataFrame,
+    num_hashes: int,
+    threshold: float,
+) -> tuple[DataFrame, DataFrame]:
+    """The body of `minhash_index_update` without its pair dedup:
+    ``(rows, updated_index)``. ``updated_index`` is ``index_df`` minus
+    the rows of re-ingested doc_ids (new text supersedes old), plus
+    ``new_bands``. ``rows`` are the VERIFIED candidate rows (doc_a,
+    doc_b, est_jaccard) of ONE band-key join of the new band rows
+    against ``updated_index``: new-vs-index pairs appear once per shared
+    band, new-vs-new pairs twice as often (both join orders). Consumers
+    that only need the set of ids on one side (the streaming ingest's
+    drop set, an anti-join build side) skip the dedup's shuffle. The
+    re-ingest anti-join's build side needs no distinct: a left-anti
+    join returns the same rows whether or not its build side repeats a
+    key."""
+    updated = index_df.join(
+        new_docs.select("doc_id"), "doc_id", "left_anti"
+    ).unionByName(new_bands)
+    a_first = F.col("a.doc_id") < F.col("b.doc_id")
     est = F.round(
         F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
         / F.lit(float(num_hashes)),
         6,
     )
-    pairs = (
-        ni.unionByName(nn)
-        .dropDuplicates(["doc_a", "doc_b"])
+    rows = (
+        new_bands.alias("a")
+        .join(updated.alias("b"), ["band", "bkey"])
+        .where(F.col("a.doc_id") != F.col("b.doc_id"))
+        .select(
+            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
+            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
+            F.when(a_first, F.col("a.sig")).otherwise(F.col("b.sig")).alias("sig_a"),
+            F.when(a_first, F.col("b.sig")).otherwise(F.col("a.sig")).alias("sig_b"),
+        )
         .withColumn("est_jaccard", est)
         .where(F.col("est_jaccard") >= threshold)
         .select("doc_a", "doc_b", "est_jaccard")
     )
-    return pairs, base_index.unionByName(new_bands)
+    return rows, updated
 
 
 def minhash_accuracy_audit(

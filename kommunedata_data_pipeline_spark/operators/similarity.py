@@ -291,9 +291,9 @@ def ann_index_update(
     delta)."""
     if new_bands is None:
         new_bands = ann_band_table(new_vecs, n_bands, band_bits)
-    base_index = index_df.join(
-        new_vecs.select("vec_id").distinct(), "vec_id", "left_anti"
-    )
+    # no distinct on the build side: a left-anti join's result does not
+    # depend on repeated keys there
+    base_index = index_df.join(new_vecs.select("vec_id"), "vec_id", "left_anti")
     ni = (
         new_bands.alias("a")
         .join(base_index.alias("b"), ["band", "bkey"])

@@ -759,3 +759,163 @@ def test_decontaminate_ingest_landed_equals_batch_and_split_invariant(spark):
 
     assert run([90]) == want
     assert run([30, 60, 90]) == want
+
+
+def _stage_id_slices(docs, bounds, stage, first=0):
+    """Append id-ordered slices [lo, hi) of ``docs`` under ``stage``, one
+    parquet file per slice, with increasing mtimes so a file stream with
+    maxFilesPerTrigger=1 reads them as successive micro-batches."""
+    import glob
+    import os
+    import shutil
+
+    os.makedirs(stage, exist_ok=True)
+    for i, (lo, hi) in enumerate(bounds, start=first):
+        part = f"{stage}__p{i}"
+        docs.where(
+            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
+        ).coalesce(1).write.mode("overwrite").parquet(part)
+        dst = f"{stage}/b{i}.parquet"
+        os.rename(glob.glob(f"{part}/part-*.parquet")[0], dst)
+        shutil.rmtree(part, ignore_errors=True)
+        os.utime(dst, (1_700_000_000 + i,) * 2)
+
+
+def _run_minhash_ingest(spark, base, ckpt):
+    from kommunedata_data_pipeline_spark.streaming.ingest import (
+        run_ingest_available_now,
+    )
+
+    stream = (
+        spark.readStream.schema("doc_id bigint, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{base}/stage")
+    )
+    run_ingest_available_now(
+        stream, f"{base}/index", f"{base}/landed", ckpt,
+        k=3, num_hashes=16, bands=4, threshold=0.5,
+    )
+
+
+def test_ingest_replay_over_twice_appended_band_delta_equals_oracle(spark):
+    """Crash case (b) of `_dedup_ingest`: a batch's band delta became
+    visible, its ids delta did not, and the batch is replayed — so the
+    band store holds that batch's band rows TWICE. Later batches then
+    meet every candidate of those docs twice; the landed set must still
+    equal the batch-mode oracle, with no pair dedup anywhere in the
+    ingest."""
+    import os
+    import shutil
+
+    from kommunedata_data_pipeline_spark.operators.dedup import (
+        minhash_band_table,
+        minhash_lsh_pairs,
+    )
+
+    docs = (
+        load_table(spark, SF, "documents")
+        .select("doc_id", "text")
+        .where(F.col("doc_id") < 90)
+    )
+    pairs = minhash_lsh_pairs(docs, 3, 16, 4, 0.5).collect()
+    # the slices must put verified pairs ACROSS the doubled batch's
+    # boundary, or the doubled rows would never be probed
+    assert any(p.doc_a < 30 <= p.doc_b for p in pairs)
+    want = {r.doc_id for r in docs.select("doc_id").collect()} - {
+        p.doc_b for p in pairs
+    }
+    base = tempfile.mkdtemp(
+        prefix="kdp-ingest-crash-b-",
+        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
+    )
+    try:
+        _stage_id_slices(docs, [(0, 30)], f"{base}/stage")
+        _run_minhash_ingest(spark, base, f"{base}/ckpt1")
+        # the crash: the ids rename never happened, and the epoch never
+        # committed, so the batch replays under a new checkpoint
+        shutil.rmtree(f"{base}/index_ids")
+        _run_minhash_ingest(spark, base, f"{base}/ckpt2")
+        first = minhash_band_table(docs.where(F.col("doc_id") < 30), 3, 16, 4)
+        assert spark.read.parquet(f"{base}/index").count() == 2 * first.count()
+        _stage_id_slices(docs, [(30, 60), (60, 90)], f"{base}/stage", first=1)
+        _run_minhash_ingest(spark, base, f"{base}/ckpt2")
+        landed = [r.doc_id for r in spark.read.parquet(f"{base}/landed").collect()]
+        assert len(landed) == len(set(landed))
+        assert set(landed) == want
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _aggregates_on_anti_join_build_sides(df) -> list[str]:
+    """Aggregate/Deduplicate nodes under the build (right) side of any
+    left-anti join in ``df``'s optimized plan."""
+
+    def aggregates(node):
+        name = node.getClass().getSimpleName()
+        found = [name] if name in ("Aggregate", "Deduplicate") else []
+        ch = node.children()
+        for i in range(ch.size()):
+            found += aggregates(ch.apply(i))
+        return found
+
+    bad = []
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if (
+            node.getClass().getSimpleName() == "Join"
+            and node.joinType().toString() == "LeftAnti"
+        ):
+            bad += aggregates(node.children().apply(1))
+        ch = node.children()
+        for i in range(ch.size()):
+            stack.append(ch.apply(i))
+    return bad
+
+
+def test_minhash_ingest_anti_join_build_sides_have_no_aggregate(
+    spark, monkeypatch
+):
+    """A left-anti join returns the same rows whether or not its build
+    side repeats keys, so the MinHash ingest's drop set, landed catalog
+    and re-ingest id set must reach their anti-joins without a
+    distinct/dropDuplicates (each would add an Exchange per batch).
+    Checked on the landed rows and both deltas of every batch: two
+    fresh batches (stored index non-empty) and a full replay (landed
+    catalog and seen-ids non-empty)."""
+    import os
+    import shutil
+
+    from kommunedata_data_pipeline_spark.streaming import ingest as ing
+
+    seen = {"batches": 0, "anti_joins": 0}
+    bad = []
+    real = ing._append_landing_and_deltas
+
+    def spy(kept, out_path, out_ranges, band_delta, band_path, *rest):
+        seen["batches"] += 1
+        for frame in (kept, band_delta, rest[1]):  # rest[1]: ids delta
+            plan = frame._jdf.queryExecution().optimizedPlan().toString()
+            seen["anti_joins"] += plan.count("LeftAnti")
+            bad.extend(_aggregates_on_anti_join_build_sides(frame))
+        return real(kept, out_path, out_ranges, band_delta, band_path, *rest)
+
+    monkeypatch.setattr(ing, "_append_landing_and_deltas", spy)
+    docs = (
+        load_table(spark, SF, "documents")
+        .select("doc_id", "text")
+        .where(F.col("doc_id") < 60)
+    )
+    base = tempfile.mkdtemp(
+        prefix="kdp-ingest-plan-",
+        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
+    )
+    try:
+        _stage_id_slices(docs, [(0, 30), (30, 60)], f"{base}/stage")
+        _run_minhash_ingest(spark, base, f"{base}/ckpt1")
+        _run_minhash_ingest(spark, base, f"{base}/ckpt2")  # full replay
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    assert seen["batches"] == 4
+    assert seen["anti_joins"] >= 8
+    assert bad == []
